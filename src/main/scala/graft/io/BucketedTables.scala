@@ -53,8 +53,10 @@ object BucketedTables {
     * count scaled to the input keeps both per-file bytes and write
     * parallelism bounded. One bucket per `targetBucketBytes` of the
     * frame's ESTIMATED size (Catalyst stats — file-length-based for
-    * parquet scans, so cheap and metadata-only), rounded UP to a power
-    * of two and clamped to [minBuckets, maxBuckets]. Powers of two
+    * parquet scans, so cheap and metadata-only), clamped to
+    * [minBuckets, maxBuckets] and rounded UP to a power of two — or
+    * DOWN to the largest power of two ≤ maxBuckets when rounding up
+    * would pass the cap (the range must hold one). Powers of two
     * because the bucket count is the layout's JOIN contract: Spark
     * elides the join shuffle when the sides' counts agree, or (with
     * coalesceBucketsInJoin) when one divides the other — power-of-two
@@ -72,13 +74,19 @@ object BucketedTables {
     require(targetBucketBytes > 0, "targetBucketBytes must be positive")
     require(minBuckets >= 1 && maxBuckets >= minBuckets,
       s"need 1 <= minBuckets ($minBuckets) <= maxBuckets ($maxBuckets)")
+    val cap = Integer.highestOneBit(maxBuckets)
+    require(cap >= minBuckets, s"[minBuckets ($minBuckets), maxBuckets " +
+      s"($maxBuckets)] holds no power of two")
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val raw = ((bytes + targetBucketBytes - 1) / targetBucketBytes)
       .min(BigInt(maxBuckets)).max(BigInt(minBuckets)).toLong
-    Integer.highestOneBit(raw.toInt) match {
+    // round UP to a power of two (in Long: no overflow past 2³⁰), then
+    // fall back to the largest power of two under the cap
+    val up = java.lang.Long.highestOneBit(raw) match {
       case p if p == raw => p
-      case p => p << 1 // round UP to the next power of two
+      case p => p << 1
     }
+    if (up > maxBuckets) cap else up.toInt
   }
 
   /** Write `df` as an external parquet table bucketed by `bucketCol`

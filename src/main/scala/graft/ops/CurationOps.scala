@@ -194,9 +194,8 @@ object CurationOps {
   }
 
   /** The auto-regime estimator, one narrow agg over the bench side:
-    * (rows, estimated distinct grams, estimated exact-set bytes). One
-    * definition shared with BloomBench so the recorded decision point
-    * can never drift from the operator's.
+    * (rows, estimated distinct grams, estimated exact-set bytes) — the
+    * same estimate BLOOM_*_r13.json recorded its decision point with.
     */
   private[graft] def benchGramEstimate(bench: DataFrame, textCol: String)
   : (Long, Long, Long) = {

@@ -437,7 +437,7 @@ object Dedup {
     * bandBits = 32 with maxHamming = 2 finds a distance-2 pair only
     * when both flipped bits land in the same 32-bit band.
     *
-    * MEASURED (graft.BandBench, 1M docs, BAND_1m_r11.json): the
+    * MEASURED (1M docs, BAND_1m_r11.json): the
     * 16-bit default's candidate occupancy is the knee past ~10⁷ docs
     * (n²/2¹⁶ per band; 3.6× cost at docs ×2, SCALE_r10 §2); 32-bit
     * bands push the occupancy domain to 2³² at a measured
@@ -1201,321 +1201,106 @@ object Dedup {
     * the canonical dup-GROUP clustering when keep/drop decisions need
     * whole groups (the pairwise greedy drop of [[minhashBandPairsOver]]
     * consumers can split a transitive chain a←b←c into inconsistent
-    * decisions; components cannot).
+    * decisions; components cannot). Returns (id, rep): one row per node
+    * of the pair graph (isolated docs never enter; their "component" is
+    * trivially themselves).
     *
-    * Scale shape: the edge list (derived from the expensive banding
-    * pipeline) is persisted once, so each iteration pays ONE hash
-    * shuffle (neighbor-label join + min agg) over cached edges —
-    * without the persist every iteration would re-run the whole
-    * MinHash/verify pipeline. The loop early-stops on a converged
-    * iteration via a bounded driver-side count — the same documented
-    * driver-action pattern as [[Similarity]]'s kmeansIterate — and
-    * throws if `maxIters` rounds did not converge (silently returning
-    * partial labels would split components, the exact inconsistency
-    * this operator exists to prevent).
+    * CONVERGENCE CONTRACT: plain rounds-to-converge = O(component
+    * DIAMETER), not corpus size — plus one final all-stable round to
+    * observe convergence. Near-dup clusters in real corpora are
+    * template families, star/clique-shaped with diameter ≤ ~3, so the
+    * loop is a handful of rounds at ANY corpus size (measured on the
+    * 4M-doc grown corpus: 4 rounds — 3 changing + 1 stability-
+    * observation — per-round wall flat; DOCS_4m_r14 / SCALE_r14 §4).
+    * The adversary is a CHAIN-shaped graph (a~b~c~…~z, diameter = n),
+    * where propagation moves the minimum one hop per round. The loop
+    * throws once `maxIters` rounds have not converged — silently
+    * returning partial labels would split components, the exact
+    * inconsistency this operator exists to prevent.
     *
-    * CONVERGENCE CONTRACT: rounds-to-converge = O(component DIAMETER),
-    * not corpus size — plus one final all-stable round to observe
-    * convergence. Near-dup clusters in real corpora are template
-    * families, star/clique-shaped with diameter ≤ ~3, so the loop is
-    * a handful of rounds at ANY corpus size (measured on the 4M-doc
-    * grown corpus: 4 rounds — 3 changing + 1 stability-observation —
-    * per-round wall flat; DOCS_4m_r14 /
-    * SCALE_r14 §4; per-round changed-counts and walls log under
-    * GRAFT_CC_LOG=1). The adversary is a CHAIN-shaped graph
-    * (a~b~c~…~z, diameter = n): min-label propagation needs O(n)
-    * rounds there, and `maxIters` exists to turn that pathology into a
-    * loud error instead of an unbounded driver loop. A corpus whose
-    * near-dup graph legitimately carries long chains wants a
-    * pointer-doubling variant (labels propagate along label-graph
-    * edges, O(log diameter) rounds at ~2× per-round cost) — not
-    * needed for the template-family regime this engine targets.
+    * POINTER DOUBLING (`jumpAfter`): every round from round
+    * `jumpAfter` on follows its propagation with a label shortcut,
+    * `rep(x) ← rep(rep(x))` — labels are node ids, so the label table
+    * self-joins as its own lookup — which doubles the distance a
+    * minimum travels per round: O(log diameter) rounds on a chain, the
+    * standard pointer-doubling argument (cf. hash-to-min, Rastogi et
+    * al. 2012). A shortcut round pays TWO hash shuffles and two jobs
+    * against a plain round's one (~2.7× per round, CC_1m_chain_r15),
+    * so on template families it is strictly more expensive:
+    *  - `Int.MaxValue` (default): plain rounds only;
+    *  - `0`: every round doubles (long chains known up front:
+    *    citation/link graphs, time-ordered revision chains);
+    *  - a small k (4): plain until round k, doubling only if
+    *    convergence stalls — a shallow graph converges before the
+    *    switch and pays exactly the plain loop, a chain pays k cheap
+    *    rounds then O(log remaining-diameter).
+    * Any interleave is sound: both round shapes only DECREASE labels
+    * and keep every label the id of a node reachable from its owner
+    * (neighbor labels through the edge, `rep(rep(x))` transitively),
+    * so labels are bounded below by the component min; at a fixpoint
+    * the propagation step was a no-op, so every edge has equal labels
+    * at both ends ⇒ labels are constant per component, and the min
+    * node's own label can never move off itself ⇒ the constant is the
+    * component min.
     *
-    * Returns (id, rep): one row per node of the pair graph (isolated
-    * docs never enter; their "component" is trivially themselves). The
-    * API owns every cache it creates: the converged labels are
-    * materialized once via an eager `localCheckpoint` (same pattern as
-    * [[crossDedupFlags]]'s batch frame) and every intermediate persist
-    * is dropped before returning, so no CacheManager entry escapes —
-    * the checkpoint blocks are reclaimed by the ContextCleaner when the
-    * returned frame goes unreferenced, with no caller-side `unpersist()`
-    * obligation (the round-6 foot-gun).
+    * CACHE OWNERSHIP: the closed edge list (derived from the expensive
+    * banding pipeline) is persisted for the loop's lifetime, so each
+    * round shuffles cached edges instead of re-running the MinHash/
+    * verify pipeline; each round's labels are an eager
+    * `localCheckpoint`, and every persist is dropped before returning,
+    * so no CacheManager entry escapes — checkpoint blocks are reclaimed
+    * by the ContextCleaner when the returned frame goes unreferenced,
+    * with no caller-side `unpersist()` obligation.
     */
-  /** Iteration count of the most recent connectedComponents /
-    * connectedComponentsFast call that CONVERGED — a driver-side bench
-    * hook (CcBench records rounds × per-round wall without parsing the
-    * GRAFT_CC_LOG stderr). Last-writer-wins under concurrency; never
-    * read it for correctness.
-    */
-  @volatile private[graft] var lastCcRounds: Int = 0
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
+      jumpAfter: Int = Int.MaxValue): DataFrame =
+    connectedComponentsRounds(pairs, maxIters, jumpAfter)._1
 
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame = {
+  /** [[connectedComponents]] plus the number of rounds it took to
+    * converge (the stability-observation round included).
+    */
+  private[graft] def connectedComponentsRounds(pairs: DataFrame,
+      maxIters: Int, jumpAfter: Int): (DataFrame, Int) = {
+    require(maxIters >= 1, s"maxIters must be ≥ 1 (got $maxIters)")
+    require(jumpAfter >= 0, s"jumpAfter must be ≥ 0 (got $jumpAfter)")
     // edges persist for the one-time setup, not the loop: `closed`
     // references edges TWICE (the union below) and the initial labels
     // scan it once more — unpersisted, each consumer re-runs the full
-    // upstream MinHash/verify pairs pipeline before closed's own cache
-    // populates (~2-3× one-time setup cost, the r14 advice finding).
+    // upstream pairs pipeline before closed's own cache populates.
     // Dropped right after the first materialization below.
     val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .persist()
-    // self-loops CLOSE the neighborhood so each round is ONE join+agg
-    // with labels referenced ONCE. The former round shape —
-    // union(neighbor-min join, own labels) — referenced labels TWICE,
-    // doubling the LOGICAL plan per round: invisible at the
-    // template-family diameter (≤4 rounds ⇒ ≤16 copies) but a
-    // diameter-16 random graph OOM'd plan stringification at 2¹⁶
-    // copies before maxIters could fire (found by the r14 differential
-    // sweep). Same semantics: min over the closed neighborhood.
-    val closed = edges.unionByName(
-      edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // per-round labels are lineage-truncated (eager localCheckpoint):
-    // persist alone caches DATA but leaves the logical tree growing
-    // with every round, and the checkpoint also sidesteps Catalyst's
-    // union-constraint rewrite bug that a union over a checkpointed
-    // frame trips (see connectedComponentsFast). Derived from `closed`
-    // (node set is identical — self-loops add no ids), so this eager
-    // materialization also populates closed's cache, after which the
-    // edges cache has no further reader.
-    // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
-    var labels = closed.filter(col("b") === col("a"))
-      .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
-    edges.unpersist()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val t0 = System.nanoTime()
-      // the self-loop row (a,a) carries a's OWN current label through
-      // the join, so the same aggregate that takes the neighborhood min
-      // also recovers the pre-round label — and convergence (no label
-      // shrank) rides the checkpoint MATERIALIZATION job itself as an
-      // Observation (r19; min(rep) ≤ _old always since the self row
-      // participates in the min, so `changed` counts exactly the rows
-      // the r18 filter+count — and the pre-r18 propagated⋈labels join —
-      // counted). One exchange AND one job per plain round: the
-      // separate count action over the checkpointed blocks was pure
-      // job-dispatch overhead per round — one extra full-label pass
-      // per round at 10⁹ nodes.
-      val obs = org.apache.spark.sql.Observation()
-      val prop0 = closed.join(labels, closed("b") === labels("id"))
-        .select(closed("a").as("id"),
-          (closed("b") === closed("a")).as("_self"), col("rep"))
-        .groupBy("id").agg(min(col("rep")).as("rep"),
-          min(when(col("_self"), col("rep"))).as("_old"))
-        .observe(obs,
-          count(when(col("rep") < col("_old"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = prop0.select(col("id"), col("rep"))
-      converged = changed == 0
-      i += 1
-      // scale-measurement hook (SCALE_r10/r14): per-iteration
-      // label-change counts and round walls put the driver-loop cost
-      // curve on record — opt-in via env so the gate's stderr stays
-      // quiet
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc] iter $i changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    closed.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations " +
-          "(component diameter exceeds maxIters); raise maxIters")
-    lastCcRounds = i
-    // the converged labels are already checkpoint-materialized; the
-    // caller gets a plain frame with no unpersist obligation
-    labels
-  }
-
-  /** [[connectedComponents]] with POINTER JUMPING — the chain-graph
-    * escape the plain loop's scaladoc names: min-label propagation
-    * alone needs O(diameter) rounds (a path a~b~…~z is the adversary),
-    * while alternating each propagation with a label-shortcut round
-    * (`rep(x) ← rep(rep(x))` — labels are themselves node ids, so the
-    * label table self-joins as its own lookup) doubles the distance a
-    * minimum travels per round: O(log diameter) rounds total, the
-    * standard pointer-doubling argument (cf. hash-to-min, Rastogi et
-    * al. 2012). Per round it pays TWO hash shuffles (the neighbor join
-    * + the self-join) against the plain loop's one, so on the
-    * template-family regime (diameter ≤ ~3) it is strictly MORE
-    * expensive — use it when components can legitimately be long
-    * chains (citation/link graphs, time-ordered revision chains), not
-    * as a default.
-    *
-    * Correctness: both steps only DECREASE labels and both preserve
-    * "label is the id of a node reachable from me" (neighbor labels
-    * are reachable through the edge; `rep(rep(x))` is reachable
-    * transitively), so labels are bounded below by the component min;
-    * at a fixpoint every edge has equal labels at both ends (each end
-    * ≤ the other) ⇒ labels are constant per component, and the min
-    * node's own label can never move off itself ⇒ the constant is the
-    * component min. Same convergence observation, cache ownership,
-    * maxIters guard, and GRAFT_CC_LOG hook as the plain loop; DedupSpec
-    * proves label-parity on the banded pair graph and convergence on a
-    * chain 10× longer than its maxIters.
-    */
-  def connectedComponentsFast(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame = {
-    // persisted for the same one-time-setup reason as the plain loop:
-    // closed's union reads edges twice and the initial labels once —
-    // without the cache each re-runs the upstream pairs pipeline
-    val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .persist()
     // self-loops CLOSE the neighborhood once, outside the loop, so each
-    // round's propagate is a single join+agg — the plain loop's
-    // per-round `union(neighbor mins, own labels)` form is unusable
-    // here: unioning against a checkpoint-truncated labels frame trips
-    // Catalyst's union-constraint rewrite (AttributeMap lookup fails on
-    // the join-side constraint attribute at planning)
+    // round's propagation is ONE join+agg with labels referenced ONCE.
+    // A per-round union(neighbor mins, own labels) referenced labels
+    // TWICE, doubling the LOGICAL plan per round (a diameter-16 random
+    // graph OOM'd plan stringification at 2¹⁶ copies), and a union over
+    // a checkpointed frame trips Catalyst's union-constraint rewrite.
     val closed = edges.unionByName(
       edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // each round's labels are LINEAGE-TRUNCATED (eager localCheckpoint,
-    // not persist): the jump step references the round's propagated
-    // frame TWICE (both sides of the self-join), so under persist alone
-    // the LOGICAL plan doubles every round — 2^rounds copies of the
-    // base tree by round 10, an analyzer/optimizer OOM before any task
-    // runs (measured: 8 GB heap dies at a 101-node chain). Checkpoint
-    // blocks are reclaimed by the ContextCleaner as each round's frame
-    // goes unreferenced, same ownership story as the plain loop's
-    // returned frame. Derived from `closed` so this eager
-    // materialization populates closed's cache; the edges cache is
-    // done after it.
     // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
+    // the distinct node set by construction — no second exchange+agg.
+    // The filter scans closed once, so this eager checkpoint populates
+    // closed's cache, after which the edges cache has no further
+    // reader. Self-edges in caller pairs can duplicate an init row;
+    // round 1's groupBy(id) collapses them, and maxIters ≥ 1 guarantees
+    // that round runs.
     var labels = closed.filter(col("b") === col("a"))
       .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
     edges.unpersist()
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val t0 = System.nanoTime()
-      // propagate: everyone adopts the min label in their CLOSED
-      // neighborhood (self-loops supply the own-label term).
-      // Checkpointed before the self-join below — it is consumed twice.
-      // The self row also recovers the PRE-round label (`_old`) in the
-      // same aggregate — see the plain loop's round for the argument
-      // (r18 optimization)
-      val propagated = closed.join(labels, closed("b") === labels("id"))
-        .select(closed("a").as("id"),
-          (closed("b") === closed("a")).as("_self"), col("rep"))
-        .groupBy("id").agg(min(col("rep")).as("rep"),
-          min(when(col("_self"), col("rep"))).as("_old"))
-        .localCheckpoint(true)
-      // shortcut: follow the label one hop through the label table
-      // itself — rep ids are node ids, so this is a self-join; a rep
-      // that is already a component min maps to itself. `_old` rides
-      // through: the jump only ever DECREASES rep further, so
-      // rep < _old still counts exactly the changed rows — observed on
-      // the jump checkpoint's own materialization job (r19; the
-      // separate count action was one extra full-label pass per round)
-      val obs = org.apache.spark.sql.Observation()
-      val jumped = propagated.as("p")
-        .join(propagated.select(col("id").as("rep"),
-          col("rep").as("rep2")).as("q"), Seq("rep"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"),
-          col("_old"))
-        .observe(obs,
-          count(when(col("rep") < col("_old"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = jumped.select(col("id"), col("rep"))
-      converged = changed == 0
-      i += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc-fast] iter $i changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    closed.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsFast did not converge in $maxIters " +
-          "iterations (log₂ of the component diameter exceeds maxIters?); " +
-          "raise maxIters")
-    lastCcRounds = i
-    labels
-  }
-
-  /** [[connectedComponents]] with the plain-vs-pointer-doubling regime
-    * AUTO-selected — the third measured-boundary auto (after
-    * crossDedupFlags' broadcast-vs-shuffle and decontaminateAuto's
-    * exact-vs-bloom): the plain loop wins on template-family graphs
-    * (diameter ≤ ~3, ONE shuffle/round — CC_1m_chain_r15 measured the
-    * fast loop ~2.7× per round) while chains need the fast loop
-    * (O(log d) vs O(d) rounds), and today the caller must know their
-    * graph's shape to pick. This loop runs PLAIN rounds first and
-    * switches to pointer-doubling only if convergence hasn't been
-    * observed after `switchAfter` rounds — a diameter the caller never
-    * sees costs nothing (template families converge before the switch
-    * and pay exactly the plain loop), while a chain pays `switchAfter`
-    * cheap rounds then finishes in O(log remaining-diameter).
-    *
-    * Interleaving is sound because BOTH round shapes preserve the two
-    * invariants the fixpoint argument needs — labels only DECREASE and
-    * every label is the id of a reachable node — so any mix converges,
-    * and at `changed == 0` the propagate step alone was a no-op, which
-    * is exactly the plain loop's fixpoint: labels constant per
-    * component, pinned to the component min by the min node's own
-    * immovable label. Labels produced mid-run by either shape are
-    * valid input to the other.
-    *
-    * Same cache ownership, convergence observation, maxIters guard,
-    * and GRAFT_CC_LOG hook as both fixed loops; q137 shares q107's
-    * oracle verbatim, DedupSpec proves parity on the banded graph plus
-    * chain convergence inside a budget the plain loop throws on, and
-    * asserts the shallow case never pays a jump round
-    * ([[lastCcRounds]] ≤ switchAfter).
-    */
-  def connectedComponentsAuto(pairs: DataFrame, switchAfter: Int = 4,
-      maxIters: Int = 20): DataFrame = {
-    require(switchAfter >= 1 && switchAfter <= maxIters,
-      s"switchAfter ($switchAfter) must be in [1, maxIters=$maxIters]")
-    val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .persist()
-    val closed = edges.unionByName(
-      edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
-    var labels = closed.filter(col("b") === col("a"))
-      .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
-    edges.unpersist()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val t0 = System.nanoTime()
-      val jump = i >= switchAfter
-      // same fused convergence as the fixed loops: the self row
-      // recovers the pre-round label in the propagate aggregate, and
-      // `changed` rides the ROUND's last checkpoint materialization as
-      // an Observation (r19) — one exchange and one job per plain
-      // round, two per jump round (was +1 count job per round; and two
-      // and three exchanges with the pre-r18 changed-check join)
+      // the self-loop row (a,a) carries a's OWN current label through
+      // the join, so the aggregate that takes the neighborhood min also
+      // recovers the pre-round label `_old`. `changed` (rep < _old —
+      // labels only decrease) rides the round's LAST checkpoint
+      // materialization as an Observation: one exchange and one job per
+      // plain round, two per doubling round. Every round's labels are
+      // lineage-truncated by the eager checkpoint — persist alone leaves
+      // the logical tree growing per round, and the shortcut references
+      // its input twice (2^rounds plan copies).
       val obs = org.apache.spark.sql.Observation()
       def observed(df: DataFrame): DataFrame = df.observe(obs,
         count(when(col("rep") < col("_old"), lit(1))).as("changed"))
@@ -1525,8 +1310,12 @@ object Dedup {
         .groupBy("id").agg(min(col("rep")).as("rep"),
           min(when(col("_self"), col("rep"))).as("_old"))
       val next =
-        if (!jump) observed(propagated0).localCheckpoint(true)
+        if (i < jumpAfter) observed(propagated0).localCheckpoint(true)
         else {
+          // shortcut: follow the label one hop through the label table;
+          // a rep that is already a component min maps to itself.
+          // `_old` rides through, and the jump only lowers rep further,
+          // so rep < _old still counts exactly the changed rows
           val propagated = propagated0.localCheckpoint(true)
           observed(propagated.as("p")
             .join(propagated.select(col("id").as("rep"),
@@ -1536,22 +1325,17 @@ object Dedup {
                 .as("rep"), col("_old")))
             .localCheckpoint(true)
         }
-      val changed = obs.get("changed").asInstanceOf[Long]
       labels = next.select(col("id"), col("rep"))
-      converged = changed == 0
+      converged = obs.get("changed").asInstanceOf[Long] == 0L
       i += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc-auto] iter $i " +
-          f"${if (jump) "jump" else "plain"} changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     closed.unpersist()
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsAuto did not converge in $maxIters " +
-          "iterations; raise maxIters")
-    lastCcRounds = i
-    labels
+        s"connectedComponents did not converge in $maxIters rounds " +
+          s"(jumpAfter=$jumpAfter): the component diameter exceeds the " +
+          "budget; raise maxIters or lower jumpAfter")
+    (labels, i)
   }
 
   /** Transitive-consistent keep/drop flags for every document: keep iff

@@ -138,8 +138,8 @@ object Pq {
 
   /** τ-CALIBRATION as an operator — the executable form of the recipe
     * every PQ-thresholded dedup docstring points at, which until r17
-    * lived only in bench code (SemIngestBench) and had to be re-derived
-    * from artifacts by every caller. Returns the DISTANCE threshold to
+    * lived only in bench code (the SEMINGEST_PQ_* studies) and had to
+    * be re-derived from artifacts by every caller. Returns the DISTANCE threshold to
     * pass as `tauDist` to [[semanticDedupFlagsPq]] (mode "adc") /
     * [[semanticDedupFlagsPqSdc]] (mode "sdc") so the flags match an
     * exact-cosine dedup at `cosThreshold` as closely as the
@@ -1119,7 +1119,7 @@ object Pq {
     * as NULL neighbors ⇒ keep, exactly the plain variant's LEFT-join
     * contract). The trade is quantization error in the SCORE: a true
     * near-dup straddling tauDist by less than the ADC error can flip,
-    * which is the recall/τ study SemDedupBench runs; the structure
+    * which is the recall/τ study in SEMDEDUP_*.json; the structure
     * (probe, candidates, determinism) is identical.
     *
     * Returns (batchIdCol, neighbor_id, adc_dist, keep). Same
@@ -1131,7 +1131,7 @@ object Pq {
     * per-query-LUT broadcast ceiling splits into bounded hash chunks
     * automatically — MEASURED failure without it: a 10⁵-row batch's
     * LUT frame overran `spark.driver.maxResultSize` (1 GB) at the
-    * broadcast-build collect (HybridBench 1M first cut, r17); 10⁴-row
+    * broadcast-build collect (first cut of HYBRID_1m_r17.json); 10⁴-row
     * micro-batches sat under the ceiling, which is why the streaming
     * ingest never hit it.
     */

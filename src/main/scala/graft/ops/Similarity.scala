@@ -193,9 +193,10 @@ object Similarity {
     * process-wide because deriving it is O(|codebook|·s·dim·iters)
     * single-threaded driver work (≈4 s at 32k cells) and the
     * consumers re-derive per CALL: a streaming ingest probes the same
-    * codebook every micro-batch, and the first ProbeBench cut measured
-    * the per-call re-clustering eating the coarse tier's entire saving
-    * at the 32k-cell operating point. Bounded FIFO (8 codebooks ≈ a
+    * codebook every micro-batch, and the first cut of the
+    * PROBE_10k_r17.json study measured the per-call re-clustering
+    * eating the coarse tier's entire saving at the 32k-cell operating
+    * point. Bounded FIFO (8 codebooks ≈ a
     * few MB); deep-equality keyed, so a re-collected but identical
     * codebook hits.
     */
@@ -238,7 +239,7 @@ object Similarity {
     * centroids: O(s + superProbe·k/s) work per row instead of O(k) —
     * at 31k cells and s = √k ≈ 176, ~60× fewer sqdists.
     *
-    * MEASURED (graft.AssignBench, 200k×64-dim interpolated corpus,
+    * MEASURED (200k×64-dim interpolated corpus,
     * local[32], ASSIGN_200k_r11.json): flat per-row cost is linear in
     * cells exactly as the fold predicts — 4.2 / 10.2 / 21.7 / 85.6
     * µs/row at 128 / 447 / 1000 / 4000 cells — while this form grows

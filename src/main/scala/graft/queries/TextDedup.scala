@@ -515,13 +515,13 @@ object TextDedup {
         TextFunctions.wordShingles(col("text"), 3), "doc_id",
         minJaccard = 0.3,
         collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
-      Dedup.connectedComponentsFast(pairs)
+      Dedup.connectedComponents(pairs, jumpAfter = 0)
         .groupBy("rep")
         .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
         .orderBy("rep")
     }),
 
-    // q107's AUTO twin — plain rounds until `switchAfter`, pointer
+    // q107's AUTO twin — plain rounds until `jumpAfter`, pointer
     // doubling only if convergence stalls: the default a caller who
     // doesn't know their graph's diameter should reach for. On gate
     // data (template families, diameter ≤ 3) it converges before the
@@ -532,7 +532,7 @@ object TextDedup {
         TextFunctions.wordShingles(col("text"), 3), "doc_id",
         minJaccard = 0.3,
         collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
-      Dedup.connectedComponentsAuto(pairs)
+      Dedup.connectedComponents(pairs, jumpAfter = 4)
         .groupBy("rep")
         .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
         .orderBy("rep")

@@ -189,10 +189,43 @@ object IdempotentSink {
     // either way (nothing ≥ batchId−1 is ever touched); the range
     // fold's target id is its smallest folded id, so the time-travel
     // filter is unaffected.
-    val from = if (tailOnly) math.max(0L, batchId - everyN - 1) else 0L
+    foldFromIfDue(batchId, everyN, tailOnly).fold(
+      Map.empty[String, Seq[Long]])(from =>
+      compactIngestTrees(spark, indexRoot, batchId - 2, numFiles, from))
+  }
+
+  /** The in-stream fold cadence shared by every ingest: `Some(fromBatch)`
+    * when a fold of `_batch` ∈ [fromBatch, batchId − 2] is due at
+    * `batchId` (every `everyN`th batch, once two batches can fold),
+    * None otherwise. `fromBatch` is 0 for the full policy and the
+    * start of the fresh tail for the tail policy ([[foldIfDue]]).
+    */
+  private def foldFromIfDue(batchId: Long, everyN: Int,
+      tailOnly: Boolean): Option[Long] =
     if (batchId >= 2 && batchId % everyN == 0)
-      compactIngestTrees(spark, indexRoot, batchId - 2, numFiles, from)
-    else Map.empty
+      Some(if (tailOnly) math.max(0L, batchId - everyN - 1) else 0L)
+    else None
+
+  /** The `_batch < batchId` time-travel read of a batch-keyed tree, or
+    * None when no data file sits below `batchId`.
+    *
+    * hasBatchDataBelow, not hasDataFiles/fs.exists: (a) bare existence
+    * is the empty-first-batch wedge (an EMPTY micro-batch leaves only
+    * _SUCCESS and reading it throws "Unable to infer schema" — r16
+    * ADVICE); (b) a tree whose only data sits at `_batch ≥ batchId` —
+    * every REPLAY of the earliest data-carrying batch — partition-prunes
+    * the read to statically empty, and probing that empty prior still
+    * costs ~15 empty-stage Spark jobs per call (JobProf r19). The
+    * FS-metadata check IS that partition pruning, at zero jobs.
+    */
+  private def priorBelow(spark: org.apache.spark.sql.SparkSession,
+      dir: String, batchId: Long): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId))
+      Some(spark.read.parquet(dir)
+        .filter(col("_batch").cast("long") < batchId).drop("_batch"))
+    else None
   }
 
   /** The shared fold core: list `_batch=` subtrees in
@@ -338,21 +371,10 @@ object IdempotentSink {
     // own triple, emptied — same schema the accumulated trees carry
     val (fpShape, bandShape, tokShape) = Dedup.corpusIndexesFromProfile(
       Dedup.corpusProfile(df, textCol, idCol), numHashes, bands)
-    def prior(dir: String, shape: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      // hasBatchDataBelow, not hasDataFiles/fs.exists: bare existence is
-      // the empty-first-batch wedge (an EMPTY micro-batch leaves only
-      // _SUCCESS and reading it throws "Unable to infer schema" — r16
-      // ADVICE), and a tree whose data all sits at `_batch ≥ batchId`
-      // (a replayed earliest batch) partition-prunes the time-travel
-      // read to statically empty anyway — the empty-shape frame is the
-      // same prior state with no scan to plan (r19)
-      if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId))
-        spark.read.parquet(dir)
-          .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      else shape.filter(lit(false))
-    }
+    // no data below batchId: the empty-shape frame is the same prior
+    // state with no scan to plan (r19)
+    def prior(dir: String, shape: DataFrame): DataFrame =
+      priorBelow(spark, dir, batchId).getOrElse(shape.filter(lit(false)))
     // EAGER batch-sized checkpoints: the flags probe and the kept-rows
     // profile each materialize ONCE, then the four writes they feed
     // (flags + fp/band/tok — disjoint trees, no ordering contract
@@ -440,73 +462,14 @@ object IdempotentSink {
       nProbe: Int = 2, excludeSelf: Boolean = false, foldEvery: Int = 0,
       foldTail: Boolean = false)(df: DataFrame, batchId: Long): Unit = {
     import graft.ops.Similarity
-    val spark = df.sparkSession
-    val vecDir = s"$indexRoot/vec"
-    // drift check BEFORE the fold: the fold rewrites/deletes _batch
-    // subtrees, and the documented contract is that a drifted codebook
-    // is refused before ANY tree mutation — a fold-due batch with a
-    // drifted codebook must not compact the tree it is about to refuse
-    // to write into (r16 ADVICE)
-    val stamp = Similarity.codebookStamp(cents)
-    val sidecar = Similarity.readStampSidecar(spark, vecDir)
-    sidecar.foreach { s =>
-      if (s != stamp)
-        throw new IllegalStateException(
-          "semanticIngestByBatch: this call's codebook (stamp " +
-            s"$stamp) is not the one the index tree at $vecDir was " +
-            s"built under ($s) — the accumulated cell assignments " +
-            "would mis-route the probe. Re-clustering requires a new " +
-            "index root.")
-    }
-    if (foldEvery > 0 && batchId >= 2 && batchId % foldEvery == 0) {
-      val from =
-        if (foldTail) math.max(0L, batchId - foldEvery - 1) else 0L
-      compactBatches(spark, vecDir, "cell", batchId - 2,
-        fromBatch = from): Unit
-    }
-    val p = new org.apache.hadoop.fs.Path(vecDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // hasBatchDataBelow, not hasDataFiles/fs.exists: the FS-metadata
-    // form of the `_batch < batchId` partition pruning — a replayed
-    // earliest batch takes the all-keep fast path instead of planning
-    // a probe over a statically-empty prior (see the PQ ingest)
-    val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
-      val prior = spark.read.parquet(vecDir)
-        .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      // cents — collected once above for the stamp — threads through
-      // the probe instead of a second centroid collect (r18)
-      Similarity.semanticDedupFlagsFrom(df, idCol, vecCol, prior, idCol,
-        vecCol, cents, tau, nProbe, excludeSelf)
-    } else
-      // first batch: no prior tree — everything keeps, no search job
-      // (and no empty-frame stamp ambiguity to warn about)
-      df.select(col(idCol),
-        lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
-        lit(null).cast("double").as("cos_sim"), lit(true).as("keep")))
-      // EAGER batch-sized checkpoint: the probe materializes once, then
-      // the flags write and the kept-index write — disjoint trees, no
-      // ordering contract, each replay-idempotent — overlap from the
-      // driver pool (guide §2.6); a lazy checkpoint would race the two
-      // overlapped consumers into re-computing the probe
-      .localCheckpoint()
-    val kept = df.join(flags.filter(col("keep")).select(idCol), Seq(idCol))
-    // repartition by cell before the write: one file per TOUCHED cell
-    // per batch instead of one per (cell × input partition) — at 32
-    // cores the un-repartitioned tree lists ~32× more files for the
-    // same rows, and the probe's per-cell listing is exactly what the
-    // fold exists to protect. The shuffle is batch-sized (the bounded
-    // quantity).
-    val keptAssigned = Similarity.ivfAssignLocal(
-      kept.select(col(idCol), col(vecCol)), vecCol, cents)
-      .select(col(idCol), col(vecCol), col("cell"))
-      .repartition(col("cell"))
-    graft.io.ParallelActions.run(Seq(
-      () => parquetByBatch(flagsOut)(flags, batchId),
-      () => indexByBatch(vecDir, "cell")(keptAssigned, batchId)))
-    // stamp AFTER the first write so the sidecar never outlives a
-    // crashed pre-write batch; a replay re-stamps identically
-    if (sidecar.isEmpty)
-      Similarity.writeStampSidecar(spark, vecDir, stamp)
+    semanticIngestEpoch(df, batchId, s"$indexRoot/vec",
+      Similarity.codebookStamp(cents), flagsOut, idCol, "cos_sim",
+      foldEvery, foldTail)(
+      prior => Similarity.semanticDedupFlagsFrom(df, idCol, vecCol, prior,
+        idCol, vecCol, cents, tau, nProbe, excludeSelf))(
+      kept => Similarity.ivfAssignLocal(kept.select(col(idCol),
+        col(vecCol)), vecCol, cents)
+        .select(col(idCol), col(vecCol), col("cell")))
   }
 
   /** The NO-FULL-VECTOR regime of [[semanticIngestByBatch]] — the
@@ -633,46 +596,10 @@ object IdempotentSink {
           s"parameters (probeMode=$probeMode) — a silently-ignored " +
           "threshold is a mis-calibration waiting to happen")
     import graft.ops.{Pq, Similarity}
-    val spark = df.sparkSession
-    val codeDir = s"$indexRoot/code"
-    // drift (either codebook) refused BEFORE any tree mutation,
-    // including a due fold — same ordering contract as the plain ingest
-    val stamp = Pq.combinedStamp(Similarity.codebookStamp(cents), cb)
-    val sidecar = Similarity.readStampSidecar(spark, codeDir)
-    sidecar.foreach { s =>
-      if (s != stamp)
-        throw new IllegalStateException(
-          "semanticIngestPqByBatch: this call's codebooks (combined " +
-            s"stamp $stamp) are not the ones the code tree at $codeDir " +
-            s"was built under ($s) — a drifted IVF codebook mis-routes " +
-            "the probe, a drifted PQ codebook mis-scores it. " +
-            "Re-clustering/re-training requires a new index root.")
-    }
-    if (foldEvery > 0 && batchId >= 2 && batchId % foldEvery == 0) {
-      val from =
-        if (foldTail) math.max(0L, batchId - foldEvery - 1) else 0L
-      compactBatches(spark, codeDir, "cell", batchId - 2,
-        fromBatch = from): Unit
-    }
-    val p = new org.apache.hadoop.fs.Path(codeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // hasBatchDataBelow, not hasDataFiles/fs.exists: (a) bare existence
-    // is the empty-first-batch wedge (see dedupIngestByBatch's prior());
-    // (b) a tree whose only data sits at `_batch ≥ batchId` — every
-    // REPLAY of the earliest data-carrying batch — partition-prunes the
-    // `_batch < batchId` prior read to statically empty, so the probe
-    // is a no-op that still costs ~15 empty-stage Spark jobs per
-    // invocation (JobProf r19). The FS-metadata check IS that partition
-    // pruning, at zero jobs; the fast path below produces the identical
-    // all-keep flags the empty-prior probe would.
-    val scoreCol = if (probeMode == "adc") "adc_dist" else "sdc_dist"
-    val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
-      val prior = spark.read.parquet(codeDir)
-        .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      // the *From variants thread `cents` — collected once above for
-      // the stamp check — through the probe instead of re-collecting
-      // the centroid frame per layer/chunk (r18)
-      probeMode match {
+    semanticIngestEpoch(df, batchId, s"$indexRoot/code",
+      Pq.combinedStamp(Similarity.codebookStamp(cents), cb), flagsOut,
+      idCol, if (probeMode == "adc") "adc_dist" else "sdc_dist",
+      foldEvery, foldTail)(prior => probeMode match {
         case "sdc" =>
           Pq.semanticDedupFlagsPqSdcFrom(df, idCol, vecCol, prior,
             idCol, cents, cb, tauDist, nProbe, excludeSelf)
@@ -685,32 +612,75 @@ object IdempotentSink {
         case _ =>
           Pq.semanticDedupFlagsPqFrom(df, idCol, vecCol, prior, idCol,
             cents, cb, tauDist, nProbe, excludeSelf)
-      }
-    } else
-      // first batch with data: no prior — everything keeps, no search
-      df.select(col(idCol),
+      })(
+      // assign + encode in one batch-sized scan
+      kept => Pq.encode(Similarity.ivfAssignLocal(kept.select(col(idCol),
+        col(vecCol)), vecCol, cents), vecCol, cb)
+        .select(col(idCol), col("pq_code"), col("cell")))
+  }
+
+  /** The one micro-batch epoch of both semantic ingests
+    * ([[semanticIngestByBatch]], [[semanticIngestPqByBatch]]) over the
+    * cell-partitioned, batch-keyed tree at `treeDir`. Each driver
+    * supplies its tree, its codebook stamp, its `probe` (batch flags
+    * `(id, neighbor_id, <scoreCol>, keep)` against the `_batch <
+    * batchId` prior) and its kept-rows → `(id, …, cell)` index-rows
+    * step. In order:
+    *  1. refuse a codebook drift against the tree's stamp sidecar
+    *     BEFORE any tree mutation — including a due fold, which must
+    *     not compact the tree it is about to refuse to write into (r16
+    *     ADVICE);
+    *  2. fold the tree if due ([[foldFromIfDue]]'s cadence, one
+    *     [[compactBatches]] call, partitionCol "cell"); the flags tree
+    *     is the caller's to fold;
+    *  3. read the prior; with no data below `batchId` everything keeps
+    *     and no probe is planned — the flags the empty-prior probe
+    *     would produce;
+    *  4. checkpoint the flags EAGERLY, then join back to the kept rows:
+    *     the probe materializes once and the two writes below — disjoint
+    *     trees, no ordering contract, each replay-idempotent — overlap
+    *     from the driver pool (guide §2.6); a lazy checkpoint would race
+    *     them into re-computing the probe;
+    *  5. repartition the index rows by cell — one file per TOUCHED cell
+    *     per batch instead of one per (cell × input partition), ~32×
+    *     fewer files at 32 cores; the shuffle is batch-sized — and write
+    *     flags and index in parallel;
+    *  6. stamp AFTER the first write, so the sidecar never outlives a
+    *     crashed pre-write batch; a replay re-stamps identically.
+    */
+  private def semanticIngestEpoch(df: DataFrame, batchId: Long,
+      treeDir: String, stamp: String, flagsOut: String, idCol: String,
+      scoreCol: String, foldEvery: Int, foldTail: Boolean)(
+      probe: DataFrame => DataFrame)(
+      indexRows: DataFrame => DataFrame): Unit = {
+    import graft.ops.Similarity
+    val spark = df.sparkSession
+    val sidecar = Similarity.readStampSidecar(spark, treeDir)
+    sidecar.foreach { s =>
+      if (s != stamp)
+        throw new IllegalStateException(
+          s"semantic ingest: this call's codebook stamp ($stamp) is not " +
+            s"the one the index tree at $treeDir was built under ($s) — " +
+            "a drifted IVF codebook mis-routes the probe, a drifted PQ " +
+            "codebook mis-scores it. Re-clustering or re-training " +
+            "requires a new index root.")
+    }
+    if (foldEvery > 0)
+      foldFromIfDue(batchId, foldEvery, foldTail).foreach(from =>
+        compactBatches(spark, treeDir, "cell", batchId - 2,
+          fromBatch = from): Unit)
+    val flags = priorBelow(spark, treeDir, batchId).map(probe)
+      .getOrElse(df.select(col(idCol),
         lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
         lit(null).cast("double").as(scoreCol), lit(true).as("keep")))
-      // EAGER batch-sized checkpoint, then the two disjoint-tree writes
-      // overlap — same §2.6 shape and crash analysis as the plain
-      // ingest's
       .localCheckpoint()
     val kept = df.join(flags.filter(col("keep")).select(idCol), Seq(idCol))
-    // assign + encode in one batch-sized scan; repartition by cell for
-    // one file per TOUCHED cell per batch (same listing math as the
-    // plain ingest — the shuffle is batch-sized)
-    val keptCodes = Pq.encode(
-      Similarity.ivfAssignLocal(kept.select(col(idCol), col(vecCol)),
-        vecCol, cents), vecCol, cb)
-      .select(col(idCol), col("pq_code"), col("cell"))
-      .repartition(col("cell"))
+    val rows = indexRows(kept).repartition(col("cell"))
     graft.io.ParallelActions.run(Seq(
       () => parquetByBatch(flagsOut)(flags, batchId),
-      () => indexByBatch(codeDir, "cell")(keptCodes, batchId)))
-    // stamp AFTER the first write so the sidecar never outlives a
-    // crashed pre-write batch; a replay re-stamps identically
+      () => indexByBatch(treeDir, "cell")(rows, batchId)))
     if (sidecar.isEmpty)
-      Similarity.writeStampSidecar(spark, codeDir, stamp)
+      Similarity.writeStampSidecar(spark, treeDir, stamp)
   }
 
   /** The resumable-swap commit record: its presence inside a temp tree

@@ -117,7 +117,7 @@ class BucketedSpec extends AnyFunSuite {
     // behavior that keeps q136's layout (and plan) unchanged
     assert(BucketedTables.bucketCountFor(rows) === 8)
     // force the stats to dominate: a 1-byte target makes the count the
-    // maxBuckets clamp; a non-power-of-two clamp is itself respected
+    // maxBuckets clamp; a power-of-two clamp is returned as is
     assert(BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L,
       minBuckets = 8, maxBuckets = 64) === 64)
     // mid-range: estimated bytes / target lands strictly between
@@ -141,5 +141,26 @@ class BucketedSpec extends AnyFunSuite {
         !f.getName.startsWith("_"))
     assert(files.length === n,
       s"expected one file per bucket ($n), got ${files.length}")
+  }
+
+  test("bucketCountFor never passes a non-power-of-two cap, stays " +
+    "positive under a cap above 2^30, and refuses a range holding no " +
+    "power of two") {
+    val rows = (0L until 4000L).map(i => (i % 100L, i)).toDF("k", "lv")
+    // a 1-byte target pins raw at the cap: rounding 100 up gives 128,
+    // so the count falls back to the largest power of two under it
+    val capped = BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L,
+      minBuckets = 8, maxBuckets = 100)
+    assert(capped <= 100 && capped === 64, s"got $capped")
+    // ~2^31 estimated bytes against a 1-byte target and an Int.MaxValue
+    // cap: rounding up past 2^30 must not overflow to a negative count
+    val big = spark.range(1L << 28).toDF()
+    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 30))
+    val huge = BucketedTables.bucketCountFor(big, targetBucketBytes = 1L,
+      minBuckets = 8, maxBuckets = Int.MaxValue)
+    assert(huge > 0 && huge === (1 << 30), s"got $huge")
+    intercept[IllegalArgumentException] {
+      BucketedTables.bucketCountFor(rows, minBuckets = 5, maxBuckets = 7)
+    }
   }
 }

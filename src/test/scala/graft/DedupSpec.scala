@@ -710,9 +710,10 @@ class DedupSpec extends AnyFunSuite {
       "connectedComponents leaked a cached frame")
   }
 
-  test("connectedComponentsFast: label-parity with the plain loop, and " +
-    "converges on a chain an order of magnitude longer than its round " +
-    "budget (where plain propagation's O(diameter) loop throws)") {
+  test("connectedComponents jumpAfter = 0: label-parity with the plain " +
+    "loop, and converges on a chain an order of magnitude longer than " +
+    "its round budget (where plain propagation's O(diameter) loop " +
+    "throws)") {
     import spark.implicits._
     // parity on a mixed graph: chain + clique + isolated pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
@@ -720,11 +721,11 @@ class DedupSpec extends AnyFunSuite {
       .toDF("id1", "id2")
     val plain = graft.ops.Dedup.connectedComponents(pairs)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val fast = graft.ops.Dedup.connectedComponentsFast(pairs)
+    val fast = graft.ops.Dedup.connectedComponents(pairs, jumpAfter = 0)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(fast === plain, "pointer doubling changed the components")
     assert(spark.sharedState.cacheManager.isEmpty,
-      "connectedComponentsFast leaked a cached frame")
+      "connectedComponents(jumpAfter = 0) leaked a cached frame")
     // the loud-error contract, at a cheap size: a 10-node path
     // (diameter 9) cannot converge in 3 propagation rounds
     assertThrows[IllegalStateException] {
@@ -737,8 +738,8 @@ class DedupSpec extends AnyFunSuite {
     // ~100 rounds; doubling covers the distance in ~7 rounds plus the
     // stability round, inside a 10-round budget
     val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val fastChain = graft.ops.Dedup.connectedComponentsFast(
-      chain, maxIters = 10)
+    val fastChain = graft.ops.Dedup.connectedComponents(
+      chain, maxIters = 10, jumpAfter = 0)
     assert(fastChain.count() == 101)
     assert(fastChain.filter(col("rep") =!= 0L).count() == 0,
       "chain did not collapse to the single min label")
@@ -754,33 +755,34 @@ class DedupSpec extends AnyFunSuite {
       val g = es.toDF("id1", "id2")
       val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
         .orderBy("id").as[(Long, Long)].collect().toSeq
-      val got = graft.ops.Dedup.connectedComponentsFast(g, maxIters = 40)
+      val got = graft.ops.Dedup.connectedComponents(g, maxIters = 40,
+        jumpAfter = 0)
         .orderBy("id").as[(Long, Long)].collect().toSeq
       assert(got === want, s"divergence at seed=$seed density=$density")
     }
   }
 
-  test("connectedComponentsAuto: shallow graphs converge before the " +
-    "switch (pure plain-loop cost), chains switch and finish inside a " +
-    "budget the plain loop throws on, and labels match both fixed " +
-    "loops on a seeded sweep") {
+  test("connectedComponents jumpAfter = 4: shallow graphs converge " +
+    "before the switch (pure plain-loop cost), chains switch and finish " +
+    "inside a budget the plain loop throws on, and labels match the " +
+    "plain loop on a seeded sweep") {
     import spark.implicits._
-    // shallow mixed graph (diameter 4 < switchAfter 5): converges in
+    // shallow mixed graph (diameter 4 < jumpAfter 5): converges in
     // 5 rounds — all plain, no jump round ever paid
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
       (20L, 21L), (21L, 22L), (20L, 22L))
       .toDF("id1", "id2")
     val plain = graft.ops.Dedup.connectedComponents(pairs)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val auto = graft.ops.Dedup.connectedComponentsAuto(pairs,
-      switchAfter = 5)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(auto === plain, "auto loop changed the components")
-    assert(graft.ops.Dedup.lastCcRounds <= 5,
-      s"shallow graph took ${graft.ops.Dedup.lastCcRounds} rounds — " +
-        "it should converge before the switch")
+    val (autoLabels, rounds) = graft.ops.Dedup.connectedComponentsRounds(
+      pairs, maxIters = 20, jumpAfter = 5)
+    val auto = autoLabels.orderBy("id").as[(Long, Long)].collect().toSeq
+    assert(auto === plain, "switching loop changed the components")
+    assert(rounds <= 5,
+      s"shallow graph took $rounds rounds — it should converge before " +
+        "the switch")
     assert(spark.sharedState.cacheManager.isEmpty,
-      "connectedComponentsAuto leaked a cached frame")
+      "connectedComponents(jumpAfter = 5) leaked a cached frame")
     // the chain adversary under a budget the PLAIN loop throws on:
     // 4 plain rounds advance the min 4 hops, then doubling covers the
     // remaining ~96 in ~7 jump rounds + stability — inside 15
@@ -788,16 +790,16 @@ class DedupSpec extends AnyFunSuite {
     assertThrows[IllegalStateException] {
       graft.ops.Dedup.connectedComponents(chain, maxIters = 15)
     }
-    val autoChain = graft.ops.Dedup.connectedComponentsAuto(
-      chain, switchAfter = 4, maxIters = 15)
+    val autoChain = graft.ops.Dedup.connectedComponents(
+      chain, maxIters = 15, jumpAfter = 4)
     assert(autoChain.count() == 101)
     assert(autoChain.filter(col("rep") =!= 0L).count() == 0,
       "chain did not collapse to the single min label")
-    // seeded sweep incl. a switch mid-convergence (switchAfter 1 jumps
+    // seeded sweep incl. a switch mid-convergence (jumpAfter 1 jumps
     // from round 2): any plain/jump interleave must land on the same
     // fixpoint
-    for (seed <- Seq(31, 32); switchAfter <- Seq(1, 3)) {
-      val rnd = new scala.util.Random(seed * 977 + switchAfter)
+    for (seed <- Seq(31, 32); jumpAfter <- Seq(1, 3)) {
+      val rnd = new scala.util.Random(seed * 977 + jumpAfter)
       val n = 50
       val es = (1 to (n * 2)).map { _ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
@@ -805,11 +807,31 @@ class DedupSpec extends AnyFunSuite {
       val g = es.toDF("id1", "id2")
       val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
         .orderBy("id").as[(Long, Long)].collect().toSeq
-      val got = graft.ops.Dedup.connectedComponentsAuto(g,
-        switchAfter = switchAfter, maxIters = 40)
+      val got = graft.ops.Dedup.connectedComponents(g, maxIters = 40,
+        jumpAfter = jumpAfter)
         .orderBy("id").as[(Long, Long)].collect().toSeq
       assert(got === want,
-        s"divergence at seed=$seed switchAfter=$switchAfter")
+        s"divergence at seed=$seed jumpAfter=$jumpAfter")
+    }
+  }
+
+  test("connectedComponents refuses a zero round budget, and caller " +
+    "self-edges still yield exactly one row per id") {
+    import spark.implicits._
+    // self-edges (x, x) duplicate a self-loop row of the initial labels;
+    // only a propagation round collapses them, so a budget that runs no
+    // round must be refused rather than leak the duplicates
+    val pairs = Seq((1L, 1L), (1L, 2L), (2L, 2L), (5L, 5L), (5L, 6L))
+      .toDF("id1", "id2")
+    assertThrows[IllegalArgumentException] {
+      graft.ops.Dedup.connectedComponents(pairs, maxIters = 0)
+    }
+    for (jumpAfter <- Seq(0, Int.MaxValue)) {
+      val comp = graft.ops.Dedup.connectedComponents(pairs,
+        jumpAfter = jumpAfter)
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      assert(comp === Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)),
+        s"jumpAfter=$jumpAfter")
     }
   }
 

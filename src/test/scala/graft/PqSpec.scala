@@ -500,7 +500,8 @@ class PqSpec extends AnyFunSuite {
     assert(math.abs(tau0s - (2.0 - 2.0 * cosT0)) < 1e-9,
       s"lossless SDC boundary must be the pure cos→L2 map (got $tau0s)")
 
-    // SEEDED near-dup corpus (the SemIngestBench generator shape):
+    // SEEDED near-dup corpus (the generator shape of the SEMINGEST_PQ_*
+    // studies):
     // ids ≡ 9 (mod 10) are noisy copies of base (id/10)·10, everything
     // else an independent random unit vector — random unit vectors are
     // PQ's worst case, so the uncalibrated τ keeps everything
@@ -514,7 +515,7 @@ class PqSpec extends AnyFunSuite {
         // σ=0.02 at dim=16 puts copies at cos ≈ 0.997 — clear of the
         // 0.95 boundary, so the agreement measures CALIBRATION quality
         // (is τ at the right level?), not straddler recall (how wide
-        // the quantization spread is — SemDedupBench's study)
+        // the quantization spread is — the SEMDEDUP_*.json study)
         val rn = new scala.util.Random(noiseOf * 999983L + 5L)
         for (j <- 0 until dim) raw(j) += 0.02 * rn.nextGaussian()
       }
